@@ -405,6 +405,9 @@ def main() -> None:
                 file=sys.stderr,
             )
     record["attempt_history"] = history
+    # The parallelism behind the timings: BUDGETS_S was tuned at local[32],
+    # so a record compares only with one taken at the same core count.
+    record["cpus"] = spark.sparkContext.defaultParallelism
 
     print(json.dumps(record))
     # The driver records only the TAIL of stdout (exactly the last 2000

@@ -19,6 +19,7 @@ Semantics pinned from the reference:
 
 from __future__ import annotations
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -116,19 +117,11 @@ def _sensor_fov() -> Column:
     )
 
 
-def drone_features(drones: DataFrame) -> DataFrame:
-    """One GeoJSON Feature row per drone record (task.ts:124-214).
-
-    Narrow transform: select-only, no shuffle, arbitrarily partitionable.
-    The first-match sensor is computed once in its own projection: it is a
-    higher-order (non-cheap) expression referenced by ~8 output fields, and
-    CollapseProject deliberately won't inline multi-referenced non-cheap
-    exprs — measured ~18% on the flattened bench query vs inline re-eval.
-    """
-    withv = drones.withColumn("_video_sensor", _video_sensor())
+def _build_projection() -> tuple[Column, list[Column]]:
+    """(first-match video sensor, output columns) of ``drone_features``."""
     sensor = F.col("_video_sensor")
     has_video = sensor.isNotNull()
-    return withv.select(
+    columns = [
         F.col("id"),
         F.lit("Feature").alias("type"),
         F.struct(
@@ -154,7 +147,38 @@ def drone_features(drones: DataFrame) -> DataFrame:
                 F.col("longitude"), F.col("latitude"), F.col("altitudeAgl")
             ).alias("coordinates"),
         ).alias("geometry"),
-    )
+    ]
+    return _video_sensor(), columns
+
+
+# (SparkContext, projection) of the last build. Every Column above is a JVM
+# object made by its own py4j call (about 1,660 of them), and none depends on
+# the input frame, so one build serves every call in the same SparkContext.
+_PROJECTION: tuple[object, tuple[Column, list[Column]]] | None = None
+
+
+def _projection() -> tuple[Column, list[Column]]:
+    """The memoized projection; rebuilt when the active SparkContext changes
+    (a new context may sit in a new JVM, where the old Columns are gone)."""
+    global _PROJECTION
+    sc = SparkContext._active_spark_context
+    if _PROJECTION is None or _PROJECTION[0] is not sc:
+        _PROJECTION = (sc, _build_projection())
+    return _PROJECTION[1]
+
+
+def drone_features(drones: DataFrame) -> DataFrame:
+    """One GeoJSON Feature row per drone record (task.ts:124-214).
+
+    Narrow transform: select-only, no shuffle, arbitrarily partitionable.
+    The first-match sensor is computed once in its own projection: it is a
+    higher-order (non-cheap) expression referenced by ~8 output fields, and
+    CollapseProject deliberately won't inline multi-referenced non-cheap
+    exprs — measured ~18% on the flattened bench query vs inline re-eval.
+    The Column trees are built once per SparkContext (``_projection``).
+    """
+    video_sensor, columns = _projection()
+    return drones.withColumn("_video_sensor", video_sensor).select(*columns)
 
 
 def feature_collection(features: DataFrame) -> DataFrame:

@@ -335,12 +335,72 @@ def fetch_drone_records(
     land-to-object-store + ``read_json_records`` (or a streaming source),
     not a bigger driver fetch. ``_payload`` injects a pre-fetched body for
     tests/offline runs.
+
+    Decode-or-throw (task.ts:119-121) happens here, before any Spark job:
+    the records are decoded into an Arrow table with the declared schema
+    (``decode_drone_records``) and handed to ``createDataFrame`` as Arrow
+    record batches. The resulting frame is JVM-resident, so the jobs that
+    read it never start a Python worker to re-serialize the records, which
+    a frame built from a Python list does in every job.
     """
     if _payload is None:
         req = urllib.request.Request(url, headers={"X-API-KEY": api_key})
         with urllib.request.urlopen(req, timeout=timeout) as resp:  # pragma: no cover
             _payload = json.loads(resp.read())
-    if not isinstance(_payload, list):
+    return spark.createDataFrame(
+        decode_drone_records(_payload), schema=DRONE_LOCATION_SCHEMA
+    )
+
+
+# DoubleType fields of the drone record: the only ones where Arrow's
+# conversion would silently accept a JSON boolean (True → 1.0).
+_DRONE_NUMERIC_FIELDS = tuple(
+    f.name for f in DRONE_LOCATION_SCHEMA.fields if isinstance(f.dataType, T.DoubleType)
+)
+
+
+def decode_drone_records(payload) -> "pa.Table":
+    """Typed decode of a DroneSense response into an Arrow table, or
+    ``ValueError`` — the schema check of TypeBox's ``Value.Check``
+    (task.ts:52-72, 119-121):
+
+    * the body must be an array of objects;
+    * strings must be strings and numbers numbers: a JSON integer is a
+      valid ``Type.Number()`` (it becomes a double), a boolean or a string
+      is not, nor is a number in a string field (``Type.String()``);
+    * non-nullable fields (every field except a sensor's ``video_url`` and
+      ``rtsp_url``) must be present and non-null, sensors included.
+
+    Unknown extra fields are ignored, as ``createDataFrame`` ignores them.
+    """
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(payload, list):
         raise ValueError("drone payload must be a JSON array (task.ts:119)")
-    # createDataFrame with the declared schema is the decode-or-throw step.
-    return spark.createDataFrame(_payload, schema=DRONE_LOCATION_SCHEMA)
+    for i, r in enumerate(payload):
+        if not isinstance(r, dict):
+            raise ValueError(f"drone record {i} is not an object: {type(r).__name__}")
+        for f in _DRONE_NUMERIC_FIELDS:
+            if type(r.get(f)) is bool:
+                raise ValueError(f"drone record {i}: {f} must be a number, not a boolean")
+    try:
+        table = pa.Table.from_pylist(payload, schema=to_arrow_schema(DRONE_LOCATION_SCHEMA))
+    except (pa.ArrowException, TypeError) as exc:
+        raise ValueError(f"drone payload does not match the record schema: {exc}") from exc
+    # Arrow keeps a non-nullable field's nulls (a missing key is a null), so
+    # nullability is checked here; the sensor structs are checked through
+    # the flattened list of every record's sensors.
+    sensors = pc.list_flatten(table["sensors"])
+    columns = [(f.name, table[f.name]) for f in DRONE_LOCATION_SCHEMA.fields if not f.nullable]
+    columns.append(("sensors[]", sensors))
+    columns += [
+        (f"sensors[].{f.name}", pc.struct_field(sensors, f.name))
+        for f in DRONE_LOCATION_SCHEMA["sensors"].dataType.elementType.fields
+        if not f.nullable
+    ]
+    for name, col in columns:
+        if col.null_count:
+            raise ValueError(f"drone payload: {name} is missing or null ({col.null_count}x)")
+    return table

@@ -16,7 +16,7 @@ env (reference README.md:14-22). The engine offers:
 
 from __future__ import annotations
 
-import json
+import itertools
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -35,14 +35,19 @@ def features_jsonl(features: DataFrame, path: str, mode: str = "overwrite") -> N
     features.write.mode(mode).json(path)
 
 
+def _collection_body(features_json: list[str]) -> str:
+    """A FeatureCollection document around Feature JSON strings as Spark's
+    ``toJSON`` writes them: joined as they are, with no parse/re-encode."""
+    return '{"type":"FeatureCollection","features":[' + ",".join(features_json) + "]}"
+
+
 def feature_collection_json(features: DataFrame) -> str:
     """Assemble the single FeatureCollection document as a JSON string.
 
     Collect-to-driver by design — matches the reference's in-memory
     accumulation (task.ts:107-110). Guarded for scale misuse.
     """
-    rows = [json.loads(r) for r in features.toJSON().collect()]
-    return json.dumps({"type": "FeatureCollection", "features": rows})
+    return _collection_body(features.toJSON().collect())
 
 
 def rest_post_batches(
@@ -62,6 +67,11 @@ def rest_post_batches(
     to an endpoint URL, or a file-writing capture in tests; unpicklable
     callables fail fast here rather than as an opaque task-serialization
     error. Runs one Spark job; returns the total number of features POSTed.
+
+    Each body is ``{"type":"FeatureCollection","features":[...]}`` with the
+    features exactly as ``features.toJSON()`` renders them (compact, null
+    fields omitted), joined without a parse/re-encode round trip; every
+    body holds at most ``batch_size`` features, all from one partition.
 
     Delivery is AT-LEAST-ONCE: Spark re-runs failed/speculative tasks, so a
     partition's batches can be POSTed more than once (the driver-side loop
@@ -85,16 +95,9 @@ def rest_post_batches(
         ) from exc
 
     def _post_partition(lines):
-        n = 0
-        batch: list[dict] = []
-        for r in lines:
-            batch.append(json.loads(r))
-            if len(batch) >= batch_size:
-                post(json.dumps({"type": "FeatureCollection", "features": batch}))
-                n += len(batch)
-                batch = []
-        if batch:
-            post(json.dumps({"type": "FeatureCollection", "features": batch}))
+        n, lines = 0, iter(lines)
+        while batch := list(itertools.islice(lines, batch_size)):
+            post(_collection_body(batch))
             n += len(batch)
         yield n
 

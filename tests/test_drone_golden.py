@@ -185,3 +185,33 @@ def test_feature_collection_document(spark):
     assert len(doc) == 1
     assert doc[0]["type"] == "FeatureCollection"
     assert sorted(f["id"] for f in doc[0]["features"]) == ["d0", "d1", "d2"]
+
+
+def test_projection_built_once_per_spark_context(spark, monkeypatch):
+    """``drone_features`` builds its Column trees once and reuses them on
+    every frame; a different active SparkContext gets a fresh build."""
+    from pyspark import SparkContext
+
+    from etl_drone_sense_spark.operators import feature_transform as ft
+
+    builds = []
+    build = ft._build_projection
+    monkeypatch.setattr(ft, "_build_projection", lambda: builds.append(1) or build())
+    monkeypatch.setattr(ft, "_PROJECTION", None)
+    a = spark.createDataFrame([_rec()], schema=DRONE_LOCATION_SCHEMA)
+    b = spark.createDataFrame([_rec(id="d2", spoiLat=1.0, spoiLng=2.0)], schema=DRONE_LOCATION_SCHEMA)
+    expected = drone_features(a).collect() + drone_features(b).collect()
+    assert len(builds) == 1
+
+    class OtherContext:
+        """Stands in for a restarted context (same JVM underneath)."""
+
+        def __init__(self, sc):
+            self._sc = sc
+
+        def __getattr__(self, name):
+            return getattr(self._sc, name)
+
+    monkeypatch.setattr(SparkContext, "_active_spark_context", OtherContext(spark.sparkContext))
+    assert drone_features(a).collect() + drone_features(b).collect() == expected
+    assert len(builds) == 2

@@ -68,6 +68,71 @@ def test_fetch_drone_records_payload_injection(spark):
         readers.fetch_drone_records(spark, _payload={"not": "a list"})
 
 
+def _without(record: dict, key: str) -> dict:
+    return {k: v for k, v in record.items() if k != key}
+
+
+_SENSOR = {"id": "s1", "name": "cam", "video_url": None, "rtsp_url": "rtsp://r/1"}
+
+# Payloads the reference's TypeBox check (task.ts:52-72, 119-121) rejects.
+# Each must raise ValueError inside fetch_drone_records, before any action
+# (an object body is checked in test_fetch_drone_records_payload_injection).
+_REJECTED = {
+    "body is a string": "[]",
+    "null non-nullable field": [dict(GOOD, model=None)],
+    "missing non-nullable field": [_without(GOOD, "model")],
+    "missing sensors": [_without(GOOD, "sensors")],
+    "null sensor": [dict(GOOD, sensors=[None])],
+    "sensor without name": [dict(GOOD, sensors=[_without(_SENSOR, "name")])],
+    "sensor with null id": [dict(GOOD, sensors=[dict(_SENSOR, id=None)])],
+    "string in numeric field": [dict(GOOD, speed="1.0")],
+    "bool in numeric field": [dict(GOOD, speed=True)],
+    "bool in numeric field, second record": [GOOD, dict(GOOD, id="d2", spoiLat=False)],
+    "number in string field": [dict(GOOD, callSign=7)],
+    "element is None": [None],
+    "element is a list": [GOOD, ["d2"]],
+    "element is a string": ["d1"],
+}
+
+
+@pytest.mark.parametrize("payload", list(_REJECTED.values()), ids=list(_REJECTED))
+def test_fetch_drone_records_rejects_at_fetch(spark, payload):
+    with pytest.raises(ValueError):
+        readers.fetch_drone_records(spark, _payload=payload)
+
+
+def test_fetch_drone_records_accepts_integer_numbers(spark):
+    """A JSON integer is a valid ``Type.Number()``: a record whose numeric
+    fields are all integers gives the same Feature as its float twin."""
+    ints = dict(
+        GOOD, latitude=10, longitude=20, lastUpdate=1_700_000_000, altitudeAgl=100,
+        altitudeMsl=200, speed=0, heading=90, spoiLat=11, spoiLng=21, sensors=[_SENSOR],
+    )
+    floats = {k: float(v) if isinstance(v, int) else v for k, v in ints.items()}
+
+    def feature(record):
+        df = readers.fetch_drone_records(spark, _payload=[record])
+        return json.loads(drone_features(df).toJSON().first())
+
+    assert feature(ints) == feature(floats)
+    assert feature(ints)["properties"]["sensor"]["range"] > 0
+
+
+def test_fetch_drone_records_empty_payload(spark, tmp_path, monkeypatch):
+    """``[]`` is a valid response: an empty frame, and handler reports 0
+    features without POSTing anything."""
+    from etl_drone_sense_spark.pipeline import handler
+    from tests.helpers import CaptureTransport, read_bodies
+
+    df = readers.fetch_drone_records(spark, _payload=[])
+    assert df.schema == DRONE_LOCATION_SCHEMA and df.count() == 0
+    monkeypatch.setenv("ETL_API", "http://localhost:5001")
+    monkeypatch.setenv("ETL_LAYER", "7")
+    out = handler(spark=spark, payload=[], transport=CaptureTransport(tmp_path))
+    assert out["features"] == 0
+    assert read_bodies(tmp_path) == []
+
+
 def test_decode_json_column(spark):
     raw = spark.createDataFrame(
         [(json.dumps(GOOD),)], schema="payload string"
@@ -131,6 +196,33 @@ def test_rest_post_batches(spark, sf_dir, tmp_path):
     assert sum(len(d["features"]) for d in docs) == n
     assert all(len(d["features"]) <= 40 for d in docs)
     assert all(d["type"] == "FeatureCollection" for d in docs)
+
+
+def test_rest_post_batches_bodies_carry_spark_json(spark, tmp_path):
+    """Every body is a FeatureCollection whose features are, one by one,
+    the frame's ``toJSON`` lines; bodies are cut per partition at
+    ``batch_size``."""
+    from tests.helpers import CapturePoster, read_bodies
+
+    payload = [dict(GOOD, id=f"d{i}", speed=float(i)) for i in range(95)]
+    feats = drone_features(readers.fetch_drone_records(spark, _payload=payload))
+    feats = feats.repartition(3).persist()
+    try:
+        sizes = feats.rdd.glom().map(len).collect()
+        expected = {f["id"]: f for f in map(json.loads, feats.toJSON().collect())}
+        posted = sinks.rest_post_batches(feats, CapturePoster(tmp_path), batch_size=10)
+    finally:
+        feats.unpersist()
+    bodies = [json.loads(b) for b in read_bodies(tmp_path)]
+    assert posted == 95 and len(expected) == 95
+    assert len(bodies) == sum(-(-n // 10) for n in sizes) > 95 // 10
+    assert all(b.keys() == {"type", "features"} for b in bodies)
+    assert all(b["type"] == "FeatureCollection" for b in bodies)
+    assert all(len(b["features"]) <= 10 for b in bodies)
+    got = [f for b in bodies for f in b["features"]]
+    assert sorted(f["id"] for f in got) == sorted(expected)
+    for f in got:
+        assert f == expected[f["id"]]
 
 
 def test_rest_post_batches_partition_local(spark, sf_dir, tmp_path):
